@@ -26,6 +26,7 @@ from __future__ import annotations
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,6 +49,10 @@ CHECKPOINT_SCHEMA = T.StructType(
 )
 
 
+# the columns done_groups reads, typed as append_done writes them
+_DONE_SCHEMA = pa.schema([("group_id", pa.int32()), ("status", pa.string())])
+
+
 def checkpoint_path(run_dir: str) -> str:
     return os.path.join(run_dir, "checkpoint")
 
@@ -63,11 +68,23 @@ def read_checkpoint(spark: SparkSession, run_dir: str) -> DataFrame:
 
 
 def done_groups(spark: SparkSession, run_dir: str) -> set[int]:
-    cp = read_checkpoint(spark, run_dir)
-    return {
-        r["group_id"]
-        for r in cp.filter(F.col("status") == "done").select("group_id").distinct().collect()
-    }
+    """Group ids with a 'done' row in the checkpoint table.
+
+    Read on the driver with pyarrow, the way ``append_done`` writes it: a
+    Spark read costs a listing, a schema job and a scan job per call, paid
+    before every resume. ``spark`` is unused and kept for callers. A
+    checkpoint directory that exists but cannot be read raises: treating
+    it as "nothing done" would silently re-run every group.
+    """
+    import pyarrow.dataset as ds
+
+    path = checkpoint_path(run_dir)
+    if not os.path.isdir(path):
+        return set()
+    table = ds.dataset(path, format="parquet", schema=_DONE_SCHEMA).to_table(
+        columns=["group_id"], filter=ds.field("status") == "done"
+    )
+    return set(table.column("group_id").to_pylist())
 
 
 def append_done(
@@ -85,7 +102,6 @@ def append_done(
     # goes through the Iceberg catalog instead.
     import uuid as _uuid
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     path = checkpoint_path(run_dir)
@@ -104,7 +120,12 @@ def append_done(
             "app_id": [spark.sparkContext.applicationId],
         }
     )
-    pq.write_table(table, os.path.join(path, f"cp-{run_id}-{group_id}-{_uuid.uuid4().hex[:8]}.parquet"))
+    name = f"cp-{run_id}-{group_id}-{_uuid.uuid4().hex[:8]}.parquet"
+    # write under a hidden name (both readers skip '.' files), then rename:
+    # a kill mid-write leaves no truncated file for done_groups to fail on
+    tmp = os.path.join(path, "." + name)
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def metrics_rollup(spark: SparkSession, run_dir: str) -> DataFrame:

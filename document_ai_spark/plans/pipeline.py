@@ -1,14 +1,18 @@
 """End-to-end extraction pipeline with checkpoint/resume (SURVEY.md §3.1).
 
-One lazy DataFrame plan per bucket group:
+Two runners share one per-group shape; a group is one Spark job plus a
+driver-side checkpoint append:
 
-    read pages (parquet/Iceberg layout, partition+column pruned)
-      -> filter(group_id == g)                  # pure fn of url
-      -> repartition(P, salted url-hash)        # X2 skew defusal
+    read pages once (parquet/Iceberg layout, column pruned)
+      -> filter to the group                    # day: partition-pruned
       -> mapInArrow(extract_batch)              # U1+F1, Arrow batches
-      -> write group=<g>/ partitioned by warc_day, mode=overwrite
-    then append 'done' row + counters to the checkpoint table.
+      -> repartition(warc_day, url bucket)      # files_per_day per day
+      -> observe(n_docs, n_ok, n_err, bytes_in) # counted during the write
+      -> write the group's dir, mode=overwrite
+    then append a 'done' row with those counters to the checkpoint table.
 
+``run_extraction_by_day`` (production) groups by warc_day partition;
+``run_extraction`` groups by url bucket (tests/backfills, see its fence).
 Re-running the same (pages_path, out_dir, run_dir) skips done groups —
 resume at partition(group) granularity, exactly-once output.
 """
@@ -18,8 +22,9 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from document_ai_spark.functions.hashing import salted_bucket
@@ -90,6 +95,28 @@ def compact_for_write(
     return df.repartition(num_tasks, F.col("warc_day"), bucket)
 
 
+def write_observed(df: DataFrame, write: Callable[[DataFrame], None]) -> dict:
+    """Run ``write`` on ``df`` and return the group's checkpoint counters
+    (n_docs, n_ok, n_err, bytes_in), observed in the same pass: the write
+    job counts the rows it writes, so no job re-reads the committed files.
+    An empty group counts zeros (a SUM over no rows is null)."""
+
+    def total(col):
+        return F.coalesce(F.sum(col), F.lit(0))
+
+    obs = Observation()
+    write(
+        df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_docs"),
+            total(F.when(F.col("kind") != "error", 1).otherwise(0)).alias("n_ok"),
+            total(F.when(F.col("kind") == "error", 1).otherwise(0)).alias("n_err"),
+            total(F.col("bytes_in")).alias("bytes_in"),
+        )
+    )
+    return obs.get
+
+
 def run_extraction(
     spark: SparkSession,
     pages_path: str,
@@ -135,22 +162,8 @@ def run_extraction(
         if files_per_day:
             extracted = compact_for_write(extracted, files_per_day)
         gdir = group_dir(out_dir, g)
-        (
-            extracted.write.mode("overwrite")
-            .partitionBy("warc_day")
-            .parquet(gdir)
-        )
-        # counters from the committed files (columnar read of 2 small cols)
-        stats = (
-            spark.read.parquet(gdir)
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.when(F.col("kind") != "error", 1).otherwise(0)).alias("n_ok"),
-                F.sum(F.when(F.col("kind") == "error", 1).otherwise(0)).alias("n_err"),
-                F.sum("bytes_in").alias("bytes_in"),
-            )
-            .collect()[0]
-            .asDict()
+        stats = write_observed(
+            extracted, lambda df: df.write.mode("overwrite").partitionBy("warc_day").parquet(gdir)
         )
         cp.append_done(spark, run_dir, run_id, g, stats, started)
         summary["groups_run"] += 1
@@ -202,7 +215,7 @@ def run_extraction_by_day(
     pages_path: str,
     out_dir: str,
     run_dir: str,
-    concurrency: int = 2,
+    concurrency: int = 4,
     files_per_day: int = 8,
     run_id: str | None = None,
     markdown: bool = False,
@@ -214,11 +227,20 @@ def run_extraction_by_day(
     a day filter is partition-PRUNED at the scan — each group job reads
     only its own files, so G groups cost one total scan, not G scans.
 
-    Groups are submitted from a small driver-side thread pool: Spark
-    stages are barriers within one job, so a lone job idles cores in the
-    write stage's tail; with 2-3 concurrent day jobs one day's (small)
-    write overlaps the next day's scan+extract and the executor stays
-    saturated. Same technique on a real cluster (concurrent jobs share the
+    A day group costs its write and nothing else: the pages table is read,
+    listed and schema-inferred once per call, the checkpoint counters are
+    observed during the write (:func:`write_observed`), and the done-group
+    lookup reads the checkpoint on the driver. Per-job and per-task
+    overhead, not the kernel, is most of a small day's cost (BASELINE.md,
+    "Day runner job budget"). So a call launches at most 1 + 2 x days Spark
+    jobs (one schema job; per day the write, whose shuffle map stage AQE
+    submits as a job of its own), and a call with every day done none.
+
+    Up to ``concurrency`` day groups run at once from a driver-side thread
+    pool. A day's parquet scan is one task per row group, so a generated
+    day is one Python extract task: without concurrent days, cores idle.
+    Concurrent jobs also overlap one day's write tail with the next day's
+    extract. Same technique on a real cluster (concurrent jobs share the
     scheduler). Each day's output dir is overwritten atomically per day =>
     re-running a half-finished day is exactly-once; checkpoint appends are
     serialized with a lock.
@@ -228,34 +250,27 @@ def run_extraction_by_day(
 
     run_id = run_id or uuid.uuid4().hex[:12]
     done = cp.done_groups(spark, run_dir)
-    days = list_days(pages_path)
-    lock = threading.Lock()
+    todo = [d for d in list_days(pages_path) if day_group_key(d) not in done]
     summary = {"run_id": run_id, "groups_done_before": len(done), "groups_run": 0}
+    if not todo:
+        return summary
+    pages = read_pages(spark, pages_path)
+    lock = threading.Lock()
 
     def do_day(day):
         started = time.time()
-        part = read_pages(spark, pages_path).filter(F.col("warc_day") == day)
+        part = pages.filter(F.col("warc_day") == day)
         extracted = compact_for_write(
             extract_pages(part, markdown=markdown), files_per_day, n_days_hint=1
         )
         gdir = os.path.join(out_dir, f"warc_day={day}")
-        extracted.drop("warc_day").write.mode("overwrite").parquet(gdir)
-        stats = (
-            spark.read.parquet(gdir)
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.when(F.col("kind") != "error", 1).otherwise(0)).alias("n_ok"),
-                F.sum(F.when(F.col("kind") == "error", 1).otherwise(0)).alias("n_err"),
-                F.sum("bytes_in").alias("bytes_in"),
-            )
-            .collect()[0]
-            .asDict()
+        stats = write_observed(
+            extracted.drop("warc_day"), lambda df: df.write.mode("overwrite").parquet(gdir)
         )
         with lock:
             cp.append_done(spark, run_dir, run_id, day_group_key(day), stats, started)
             summary["groups_run"] += 1
 
-    todo = [d for d in days if day_group_key(d) not in done]
     with ThreadPoolExecutor(max_workers=max(1, concurrency)) as pool:
         list(pool.map(do_day, todo))
     return summary

@@ -7,17 +7,23 @@ Ship the package alongside the job and run it on a cluster:
         scripts/extract_job.py <pages_dir> <out_dir> [n_groups] [salt_partitions] [files_per_day] \
         [--by-day] [--warc] [--markdown]
 
-Flags: --by-day resumes at warc_day-partition granularity with 2-3
-concurrent day jobs (partition-pruned scans; n_groups/salt ignored);
+Flags: --by-day resumes at warc_day-partition granularity, running up to
+4 day groups at once, each one Spark job (partition-pruned scans;
+n_groups/salt ignored);
 --warc reads raw .warc/.warc.gz files instead of the Parquet table
 (per-file parallelism; pair with salt_partitions to rebalance);
 --markdown emits structure-marked text (heading/list markers) instead of
 plain text — the corpus shape for markdown-structure chunking.
 
-The job is resumable: re-submitting with the same <out_dir> skips bucket
-groups already recorded 'done' in <out_dir>/_checkpoint (exactly-once via
-per-group overwrite; see document_ai_spark/plans/pipeline.py). On a real
-cluster the parquet paths become Iceberg tables — the plan is unchanged.
+The job is resumable: re-submitting with the same <out_dir> skips groups
+(url buckets, or days with --by-day) already recorded 'done' in
+<out_dir>/_checkpoint (exactly-once via per-group overwrite; see
+document_ai_spark/plans/pipeline.py). The session carries the engine's
+Spark settings (document_ai_spark/session.py ENGINE_CONF: 8 MB splits,
+zstd, committer v2, AQE, Arrow batching; shuffle partitions default to
+the cluster's core count unless --conf spark.sql.shuffle.partitions is
+given). On a real cluster the parquet paths become Iceberg tables — the
+plan is unchanged.
 """
 
 from __future__ import annotations
@@ -54,20 +60,12 @@ def main() -> None:
     salt_partitions = int(args[3]) if len(args) > 3 else None
     files_per_day = int(args[4]) if len(args) > 4 else 8
 
-    from pyspark.sql import SparkSession
-
     from document_ai_spark.plans.pipeline import run_extraction, run_extraction_by_day
+    from document_ai_spark.session import job_spark
 
-    # spark-submit supplies master/deploy config; we only pin the
-    # workload-specific settings (Arrow batching for MB-sized binary rows).
-    spark = (
-        SparkSession.builder.appName("document_ai_spark.extract")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    # spark-submit supplies master/deploy config; the engine settings are
+    # session.ENGINE_CONF, the same ones tests and benches run with.
+    spark = job_spark("document_ai_spark.extract")
     if "--by-day" in flags:
         summary = run_extraction_by_day(
             spark,

@@ -110,3 +110,100 @@ def test_day_resume_keyed_on_day_value_not_index(spark, pages_dir, tmp_path):
     # output now covers all days exactly once
     df = load_extracted(spark, out)
     assert df.count() == df.select("url").distinct().count() == 200
+
+
+def _committed_counters(spark, gdir):
+    return (
+        spark.read.parquet(gdir)
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.when(F.col("kind") != "error", 1).otherwise(0)).alias("n_ok"),
+            F.sum(F.when(F.col("kind") == "error", 1).otherwise(0)).alias("n_err"),
+            F.sum("bytes_in").alias("bytes_in"),
+        )
+        .collect()[0]
+        .asDict()
+    )
+
+
+def test_observed_counters_equal_committed_output(spark, pages_dir, tmp_path):
+    """Both runners count a group's checkpoint row during its write, not by
+    re-reading it: every row must still equal a re-read of that group's
+    committed files, the planted error='encrypted' PDF included."""
+    from document_ai_spark.plans.checkpoint import read_checkpoint
+    from document_ai_spark.plans.pipeline import (
+        day_group_key,
+        group_dir,
+        list_days,
+        run_extraction_by_day,
+    )
+
+    day_out, day_run = str(tmp_path / "day_out"), str(tmp_path / "day_run")
+    run_extraction_by_day(spark, pages_dir, day_out, day_run)
+    day_dirs = {day_group_key(d): os.path.join(day_out, f"warc_day={d}") for d in list_days(pages_dir)}
+    grp_out, grp_run = str(tmp_path / "grp_out"), str(tmp_path / "grp_run")
+    run_extraction(spark, pages_dir, grp_out, grp_run, n_groups=3, files_per_day=2)
+    grp_dirs = {g: group_dir(grp_out, g) for g in range(3)}
+
+    n_err = 0
+    for run, dirs in ((day_run, day_dirs), (grp_run, grp_dirs)):
+        rows = read_checkpoint(spark, run).collect()
+        assert sorted(r["group_id"] for r in rows) == sorted(dirs)
+        for r in rows:
+            truth = _committed_counters(spark, dirs[r["group_id"]])
+            assert {k: r[k] for k in truth} == truth
+            n_err += r["n_err"]
+    assert n_err == 2  # the encrypted PDF, once per runner
+
+
+def test_empty_day_partition_commits_zero_counters(spark, pages_dir, tmp_path):
+    """Regression: a warc_day partition holding only a zero-row file made
+    the day runner crash in append_done (SUM over no rows is null) after
+    the other days had committed. It must record a 'done' row of zeros."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from document_ai_spark.plans.checkpoint import read_checkpoint
+    from document_ai_spark.plans.pipeline import day_group_key, list_days, run_extraction_by_day
+
+    src = str(tmp_path / "pages")
+    shutil.copytree(pages_dir, src)
+    days = list_days(src)
+    first = os.path.join(src, f"warc_day={days[0]}")
+    part = next(f for f in sorted(os.listdir(first)) if f.endswith(".parquet"))
+    empty_day = "2023-12-31"
+    os.makedirs(os.path.join(src, f"warc_day={empty_day}"))
+    pq.write_table(
+        pq.read_table(os.path.join(first, part)).slice(0, 0),
+        os.path.join(src, f"warc_day={empty_day}", "part-0.parquet"),
+    )
+
+    out, run = str(tmp_path / "out"), str(tmp_path / "run")
+    s = run_extraction_by_day(spark, src, out, run)
+    assert s["groups_run"] == len(days) + 1
+    rows = {r["group_id"]: r for r in read_checkpoint(spark, run).collect()}
+    zero = rows[day_group_key(empty_day)]
+    assert (zero["status"], zero["n_docs"], zero["n_ok"], zero["n_err"], zero["bytes_in"]) == (
+        "done", 0, 0, 0, 0,
+    )
+    assert sum(r["n_docs"] for r in rows.values()) == 200
+    assert load_extracted(spark, out).count() == 200
+
+
+def test_done_groups_raises_on_unreadable_checkpoint(spark, pages_dir, tmp_path):
+    """A checkpoint that exists but cannot be read must fail the run, not
+    read as "nothing done" (which would silently re-run every group)."""
+    import pyarrow as pa
+
+    from document_ai_spark.plans.checkpoint import checkpoint_path
+
+    out, run = str(tmp_path / "out"), str(tmp_path / "run")
+    run_extraction(spark, pages_dir, out, run, n_groups=2)
+    assert done_groups(spark, run) == {0, 1}
+    with open(os.path.join(checkpoint_path(run), "cp-torn.parquet"), "wb") as f:
+        f.write(b"PAR1 not a parquet file")
+    with pytest.raises(pa.ArrowInvalid):
+        done_groups(spark, run)
+    with pytest.raises(pa.ArrowInvalid):
+        run_extraction(spark, pages_dir, out, run, n_groups=2)

@@ -141,3 +141,31 @@ def test_day_group_key_stability_and_ranges():
     x = day_group_key("week=12")
     assert x == day_group_key("week=12") and x >= 0x40000000
     assert day_group_key("week=12") != day_group_key("week=13")
+
+
+def test_day_runner_spark_job_budget(spark, pages_dir, tmp_path):
+    """One day-runner call over D days launches at most 1 + 2*D Spark jobs
+    (one schema job; per day the write and, under AQE, its shuffle map
+    stage), and a call with every day done launches none: no per-group
+    re-read, re-listing or Spark-side checkpoint read."""
+    from document_ai_spark.plans.pipeline import list_days, run_extraction_by_day
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_of(call):
+        before = set(tracker.getJobIdsForGroup(None))
+        call()
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    out, run = str(tmp_path / "out"), str(tmp_path / "run")
+    n_days = len(list_days(pages_dir))
+    assert n_days == 4
+    assert jobs_of(lambda: run_extraction_by_day(spark, pages_dir, out, run)) <= 1 + 2 * n_days
+    assert jobs_of(lambda: run_extraction_by_day(spark, pages_dir, out, run)) == 0
+
+
+def test_get_spark_applies_engine_conf(spark):
+    """get_spark and the spark-submit job's job_spark share ENGINE_CONF."""
+    from document_ai_spark.session import ENGINE_CONF
+
+    assert {k: spark.conf.get(k) for k in ENGINE_CONF} == ENGINE_CONF
